@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single configuration point for every entry main (Verify, Bench, tests).
+/** Single configuration point for every entry main (Verify, the probes,
+  * the perfbench harness, tests).
   *
   * The oracle-parity-critical settings live here so they cannot drift
   * between the correctness gate and the bench:

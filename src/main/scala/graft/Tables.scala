@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.LongType
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -65,20 +66,15 @@ object Tables {
     * unchanged — the DuckDB oracles keep reading the original files.
     * CAVEAT (floating point): the repair turns a 1-partition scan into
     * up to 8, which reorders partial-aggregate combination, so any
-    * query summing DOUBLES can drift by ulps between repair-on and
-    * repair-off (the SPARK_GRAFT_NO_LAYOUT_REPAIR A/B) or versus
-    * pre-repair rounds' hashes; the A/B validation for such queries
-    * compares row sets with a numeric tolerance, not bit-exact hashes.
+    * query summing DOUBLES can drift by ulps between a repaired and a
+    * raw scan of the same file; such queries are checked on row sets
+    * with a numeric tolerance, not bit-exact hashes.
     * Multi-row-group files (the sf1 stress corpora),
     * directory outputs, and small tables pass through untouched, and
     * any preflight/rewrite failure falls back to the raw path.
     */
   private def repairLayout(s: SparkSession, dir: String, name: String): String = {
     val src = s"$dir/$name.parquet"
-    // operational opt-out (also the A/B switch the repair's own
-    // validation uses: same queries with and without repair must
-    // produce identical row sets)
-    if (sys.env.contains("SPARK_GRAFT_NO_LAYOUT_REPAIR")) return src
     try {
       val p = new org.apache.hadoop.fs.Path(src)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -109,7 +105,7 @@ object Tables {
         .option("maxRecordsPerFile", math.max(1L, (rows + 7) / 8))
         .mode("overwrite").parquet(out)
       out
-    } catch { case _: Throwable => src }
+    } catch { case NonFatal(_) => src }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")

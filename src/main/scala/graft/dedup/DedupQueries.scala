@@ -412,8 +412,7 @@ object DedupQueries {
     * depth — stays ≤ PairDepthThreshold (both measured regimes sit
     * FAR from the boundary: ~1-2 shallow, ≥50 deep). Components are
     * provably identical either way (DedupSpec property), so this is a
-    * physical-plan choice, never semantics. `SPARK_GRAFT_COMPONENT_EDGES`
-    * (star|pairs) forces a shape for A/B runs.
+    * physical-plan choice, never semantics.
     */
   private[dedup] def componentEdges(s: SparkSession, d: String): DataFrame =
     decideEdgeShape(s, d) match {
@@ -448,54 +447,37 @@ object DedupQueries {
   private val edgeShape =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** The env force parsed once — shared by the memoized decision and
-    * the volumes-in-hand entry below.
-    */
-  private def forcedEdgeShape: Option[String] =
-    sys.env.get("SPARK_GRAFT_COMPONENT_EDGES").map {
-      // validate loudly: a typo'd forced shape would otherwise run
-      // star on BOTH A/B legs and record a vacuous measurement
-      case v @ ("star" | "pairs") => v
-      case other => sys.error(
-        s"SPARK_GRAFT_COMPONENT_EDGES must be star|pairs, got '$other'")
-    }
-
   /** The pairs↔star decision from ALREADY-COMPUTED band volumes — for
     * callers that compute the Σc(c−1)/2 / Σ(c−1) aggregate themselves
     * (GrowthProbe's `edges` family publishes it in its artifact, so it
     * derives the decision from the same pass instead of paying
     * [[decideEdgeShape]]'s second full band-table aggregate — r17
-    * ADVICE). Same env force, same threshold rule.
+    * ADVICE). The same threshold rule [[decideEdgeShape]] applies.
     */
   private[graft] def decideEdgeShapeFromVolumes(pairVol: Long,
                                                 starVol: Long): String =
-    forcedEdgeShape.getOrElse(
-      if (pairVol <= PairDepthThreshold * math.max(1L, starVol)) "pairs"
-      else "star")
+    if (pairVol <= PairDepthThreshold * math.max(1L, starVol)) "pairs"
+    else "star"
 
-  private[graft] def decideEdgeShape(s: SparkSession, d: String): String =
-    forcedEdgeShape.getOrElse {
-      // benign-race memo (NOT compute-under-CHM-lock — the probe is a
-      // Spark job; see Tables/Bucketing): concurrent first callers may
-      // both run the aggregate, but it is deterministic in the data,
-      // so putIfAbsent keeps one identical value
-      val cached = edgeShape.get(d)
-      if (cached != null) cached
-      else {
-        val r = graft.Caches.scoped(bandTable(s, d))
-          .groupBy(col("band_idx"), col("bkey"))
-          .agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)).as("pairs"),
-            coalesce(sum(expr("c - 1")), lit(0L)).as("stars"))
-          .first()
-        val v =
-          if (r.getLong(0) <= PairDepthThreshold * math.max(1L, r.getLong(1)))
-            "pairs"
-          else "star"
-        edgeShape.putIfAbsent(d, v)
-        v
-      }
+  private[graft] def decideEdgeShape(s: SparkSession, d: String): String = {
+    // benign-race memo (NOT compute-under-CHM-lock — the probe is a
+    // Spark job; see Tables/Bucketing): concurrent first callers may
+    // both run the aggregate, but it is deterministic in the data,
+    // so putIfAbsent keeps one identical value
+    val cached = edgeShape.get(d)
+    if (cached != null) cached
+    else {
+      val r = graft.Caches.scoped(bandTable(s, d))
+        .groupBy(col("band_idx"), col("bkey"))
+        .agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)).as("pairs"),
+          coalesce(sum(expr("c - 1")), lit(0L)).as("stars"))
+        .first()
+      val v = decideEdgeShapeFromVolumes(r.getLong(0), r.getLong(1))
+      edgeShape.putIfAbsent(d, v)
+      v
     }
+  }
 
   private[dedup] def minhashStarEdges(s: SparkSession, d: String): DataFrame = {
     val bands = graft.Caches.scoped(bandTable(s, d))

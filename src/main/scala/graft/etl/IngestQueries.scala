@@ -26,8 +26,7 @@ object IngestQueries {
       (s, d) => {
         val dir = TmpDirs.dir(s"jsonl_${Bucketing.dirTag(d)}")
         Tables.documents(s, d).write.mode("overwrite").json(dir)
-        graft.sources.Sources
-          .jsonlWithJsonSchema(s, dir, documentsSchemaJson)
+        s.read.schema(Schemas.fromBigQueryJson(documentsSchemaJson)).json(dir)
           .select(col("doc_id"), md5(col("text")).as("text_md5"),
             col("lang"), col("source"), col("n_chars"))
       },

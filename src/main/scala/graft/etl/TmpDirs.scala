@@ -4,8 +4,8 @@ package graft.etl
   *
   * Paths are stable WITHIN a JVM (a warm-up and a timed bench run of the
   * same query overwrite one directory instead of accumulating) but unique
-  * ACROSS JVMs, so a Bench and a Verify running concurrently on the same
-  * sf-dir can't race on each other's output.
+  * ACROSS JVMs, so a benchmark run and a Verify running concurrently on
+  * the same sf-dir can't race on each other's output.
   */
 object TmpDirs {
   private lazy val base: String = {

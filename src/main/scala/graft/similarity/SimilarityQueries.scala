@@ -532,13 +532,16 @@ object SimilarityQueries {
   private val nselCte: String =
     s"nsel AS (SELECT COUNT(*) > ${Ivf.HierSwitchN} AS hier FROM embeddings)"
 
-  /** Count-gated row sources for the two regime chains (r19, VERDICT
-    * r18 Next #1): DuckDB materializes BOTH chains of an adaptive
-    * union, so each chain now draws its rows from the side of this
-    * gate that selected it — the unselected chain runs over an empty
-    * relation (its O(n·k) centroid cross joins cost ~nothing) and the
-    * selected chain's base filter is identically true, leaving the
-    * output byte-identical. Must be the FIRST items in the WITH (the
+  /** Count-gated row sources for the two regimes' centroid cross-join
+    * chains (r19, VERDICT r18 Next #1): DuckDB materializes BOTH chains
+    * of an adaptive union, so each regime's kmeans / hier-assignment
+    * chain draws its rows from the side of this gate that selected it —
+    * the unselected chain's O(n·k) centroid cross joins run over an
+    * empty relation and the selected chain's base filter is identically
+    * true, leaving the output byte-identical. Only those chains are
+    * gated: chains shared by both legs still scan the full
+    * `embeddings` table in either regime — `ann_reranked`'s PQ chain
+    * (`sub`/`bc`/`dt`) is one. Must be the FIRST items in the WITH (the
     * chains reference embf/embh).
     */
   private val gatedBaseCtes: String =

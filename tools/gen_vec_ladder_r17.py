@@ -7,8 +7,8 @@ n <= 8k gate corpora; hier 6.8-13x ahead at 80k/256k,
 growth_vecs_hier_r16.json). The ladder they fed put the crossover
 between 2k and 8k, and the SHIPPED constant is Ivf.HierSwitchN =
 4096 (Ivf.scala) — so under the final constant BOTH corpora here are
-adaptive-hier; the per-leg numbers are unaffected (the A/B forces
-each side via SPARK_GRAFT_VEC_QUANTIZER):
+adaptive-hier; the per-leg numbers, measured with each side forced,
+are unaffected:
 
 - target/sfvl24k/embeddings.parquet — 24576 vectors
 - target/sfvl48k/embeddings.parquet — 49152 vectors
