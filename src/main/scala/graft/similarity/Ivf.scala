@@ -7,15 +7,24 @@ import org.apache.spark.sql.functions._
 
 /** Shared trained-quantizer (k-means / IVF) machinery.
   *
-  * One home for the training loop, the literal-centroid assignment
-  * column, and the DuckDB replay CTE — consumed by the §2.4 quantizer
-  * stack (kmeans_train, ann_ivf_trained, pipeline_semdedup via
-  * SimilarityQueries) AND, since round 12, by the kNN-graph /
-  * embedding-pair family (vec_knn_graph, vec_knn_hubness,
-  * dedup_embedding, text_bitext_mine, vec_cluster_components), whose
-  * candidate generation now blocks on trained cells instead of the
-  * fixed-8-bucket hyperplane-LSH key space round 11 flagged as the
-  * one remaining quadratic.
+  * One home for the training recipe, the literal-centroid assignment
+  * column, the candidate-pair builder and the DuckDB replay CTEs —
+  * consumed by the §2.4 quantizer stack (kmeans_train,
+  * ann_ivf_trained, pipeline_semdedup via SimilarityQueries) and by
+  * the kNN-graph / embedding-pair family (vec_knn_graph,
+  * vec_knn_hubness, dedup_embedding, text_bitext_mine,
+  * vec_cluster_components), whose candidate generation blocks on
+  * trained cells.
+  *
+  * Two quantizer legs, one implementation per step:
+  *  - FLAT: one level, cell key `Seq("cid")`;
+  *  - HIERARCHICAL: coarse cell × fine cell of the coarse residual,
+  *    cell key `Seq("cid", "fid")`.
+  * Both train with `lloydOnce` (md5 bottom-k seeds, one exact Lloyd
+  * update) and both generate pairs with `cellPairs`: assign a cell
+  * key, cap hot keys, pair within a key, re-expand duplicates. The
+  * legs differ only in the key columns and the models they train;
+  * `decideQuantizer` picks one per corpus.
   *
   * Embeddings quantize to exact integers (floor(x*1000+0.5) is
   * engine-identical where round() is not) — every k-means sum is then
@@ -28,11 +37,9 @@ import org.apache.spark.sql.functions._
   *    config constant — bigger corpora raise it as a deployment
   *    choice, nothing in the plan depends on data volume.
   *  - `graphK(s, d)` (cells PROPORTIONAL to the corpus, ~4 vectors
-  *    per cell, clamped to [128, 32768] in this test env — ceiling
-  *    raised a decade in r15 after the GrowthProbe ladder caught the
-  *    old 4096 bound binding at 80k vectors): the
-  *    pair-generating regime. An all-corpus family (kNN graph,
-  *    near-dup pairs) pays O(sum cell_i^2) for candidates, so the
+  *    per cell, clamped to [128, 32768]): the pair-generating
+  *    regime. An all-corpus family (kNN graph, near-dup pairs) pays
+  *    O(sum cell_i^2) for candidates, so the
   *    only way candidates stay LINEAR in n is constant cell SIZE —
   *    i.e. cell count grows with the corpus, exactly how a
   *    production IVF sizes its coarse quantizer (cells ~ n /
@@ -146,33 +153,41 @@ object Ivf {
     * result, the memo cannot change any output.
     */
   def trainedCentroids(s: SparkSession, d: String,
-                       k: Int = kmeansK): Seq[(Long, Seq[Double])] = {
-    // benign-race memo — the training is a multi-job Spark run and
-    // must not execute under a CHM bin lock (see graphK)
-    val key = s"$d#$k"
-    val cached = centCache.get(key)
+                       k: Int = kmeansK): Seq[(Long, Seq[Double])] =
+    model(s"$d#$k")(lloydOnce(quantizedVecs(s, d), k))
+
+  /** Benign-race memo for trained models — training is a multi-job
+    * Spark run and must not execute under a CHM bin lock (see corpusN).
+    * putIfAbsent keeps the first-stored model, so every caller gets the
+    * SAME object (spec-pinned).
+    */
+  private def model(key: String)(
+      train: => Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
+    val cached = models.get(key)
     if (cached != null) cached
     else {
-      val v = trainCentroids(s, d, k)
-      Option(centCache.putIfAbsent(key, v)).getOrElse(v)
+      val v = train
+      Option(models.putIfAbsent(key, v)).getOrElse(v)
     }
   }
 
-  private val centCache =
+  private val models =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
 
-  /** Seed sample: deterministic bottom-k by md5(vec_id) — a fixed-size
-    * uniform draw whose cost is one TakeOrdered over the corpus; the
-    * collect is k rows (the MODEL size) at any corpus size.
+  /** The one training recipe, over any `(vec_id, qv)` frame of exact
+    * long vectors (the corpus for the coarse model, coarse residuals
+    * for the fine codebook). Seeds: deterministic bottom-k by
+    * md5(vec_id) — a fixed-size uniform draw whose cost is one
+    * TakeOrdered; the collect is k rows (the MODEL size) at any corpus
+    * size. Then one Lloyd update: exact BIGINT member sums, exact s/n
+    * centroids.
     */
-  private def trainCentroids(s: SparkSession, d: String,
-                             k: Int): Seq[(Long, Seq[Double])] = {
-    val q = quantizedVecs(s, d)
-    val c0 = q.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+  private def lloydOnce(vecs: DataFrame, k: Int): Seq[(Long, Seq[Double])] = {
+    val c0 = vecs.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(k).collect().map { r =>
       r.getLong(0) -> r.getSeq[Long](1).map(_.toDouble).toSeq
     }.toSeq.sortBy(_._1)
-    memberSums(q.withColumn("cid", centroidRanks(c0, 1).getItem(0)))
+    memberSums(vecs.withColumn("cid", centroidRanks(c0, 1).getItem(0)))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -236,8 +251,8 @@ object Ivf {
       |           i -> (CAST(q.qv[i] AS DOUBLE) - c.cv[i]) * (CAST(q.qv[i] AS DOUBLE) - c.cv[i]))) AS dist
       |       FROM ${p}q q CROSS JOIN ${p}c1 c)""".stripMargin
 
-  /** Hot-cell cap for the pair regime (round 13 — the IVF member of
-    * the frequency-guard family beside SimhashBandCap / EditBlockCap /
+  /** Hot-cell cap for the pair regime (the IVF member of the
+    * frequency-guard family beside SimhashBandCap / EditBlockCap /
     * SubstringStopT): a trained cell holding more than this many
     * DISTINCT quantized vectors is a region the scaled quantizer
     * under-resolved (clustered real corpora produce them; the
@@ -247,7 +262,7 @@ object Ivf {
     * unless ALL of its shared probe cells (4 per vector) are hot.
     * Counting DISTINCT qv, not rows, matters: exact-duplicate spikes
     * (boilerplate docs embed identically) inflate raw membership but
-    * collapse to one slot in the join (see `candidatePairs`), so they
+    * collapse to one slot in the join (see `cellPairs`), so they
     * must not evict their own cell. No-op at every measured corpus
     * (max distinct-qv cell: 87 gate sf0.1, 161 clustered stress 4x —
     * tools/gen_clustered.py); mirrored in every consuming oracle.
@@ -256,16 +271,11 @@ object Ivf {
 
   /** Pair-regime assignment CTE: the scaled-k chain plus
     * `pasg(vec_id, cid)` = each vector's `graphNprobe` nearest trained
-    * cells, hot cells (> CellCap distinct qv) removed — the oracle
-    * twin of the capped cell exchange inside `candidatePairs`.
-    */
-  def pairAssignCteSql: String = pairAssignCteSqlWithCap(CellCap)
-
-  /** [[pairAssignCteSql]] with an explicit cap — `vec_cellcap_pairs`
-    * runs this at cap=8 so the hotc/pasg branch (a no-op under the
-    * production CellCap on every gate corpus so far) is exercised
-    * against DuckDB every round instead of lying dormant until a
-    * hot-celled corpus arrives (round-13 ADVICE).
+    * cells, hot cells (> cap distinct qv) removed — the oracle twin of
+    * the capped cell exchange inside `cellPairs`. Consumers pass
+    * CellCap; `vec_cellcap_pairs` passes 8, so the hotc/pasg branch (a
+    * no-op under CellCap on every gate corpus) runs against DuckDB
+    * every round.
     */
   def pairAssignCteSqlWithCap(cap: Long, p: String = "",
                               src: String = "embeddings"): String =
@@ -278,48 +288,35 @@ object Ivf {
       |         GROUP BY p.cid HAVING COUNT(DISTINCT g.gid) > $cap),
       |${p}pasg AS MATERIALIZED (SELECT * FROM ${p}pasg0 WHERE cid NOT IN (SELECT cid FROM ${p}hotc))""".stripMargin
 
-  /** Pair-regime cell assignments `(vec_id, cid)` — each vector under
-    * its `graphNprobe` nearest scaled-k cells, REPARTITIONED by vec_id
-    * first: the O(k*dim)-per-row assignment plus the downstream pair
-    * join + exact cosines are CPU-bound pair work, and a compact
+  /** The pair regime's corpus input `(vec_id, qv)`, REPARTITIONED by
+    * vec_id first: the O(k*dim)-per-row assignment plus the downstream
+    * pair join + exact cosines are CPU-bound pair work, and a compact
     * parquet input is ~1 scan split, so without the exchange the whole
-    * stretch runs on one core (the round-11 narrow-scan lesson; the
-    * probe-based IVF queries deliberately do NOT repartition — their
-    * no-corpus-shuffle plan is the design).
+    * stretch runs on one core (the probe-based IVF queries deliberately
+    * do NOT repartition — their no-corpus-shuffle plan is the design).
     */
-  def pairAssignments(s: SparkSession, d: String): DataFrame = {
-    val cents = trainedCentroids(s, d, graphK(s, d))
+  private def pairInput(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .repartition(col("vec_id"))
-      .withColumn("qv", quantCol)
-      .select(col("vec_id"), explode(centroidRanks(cents, graphNprobe)).as("cid"))
+      .select(col("vec_id"), quantCol.as("qv"))
+
+  /** FLAT cell keys of any `(id, qv)` frame: each row under its
+    * `graphNprobe` nearest scaled-k cells, as `(id, cid)`.
+    */
+  private def flatKeys(s: SparkSession, d: String, q: DataFrame,
+                       id: String): DataFrame = {
+    val cents = trainedCentroids(s, d, graphK(s, d))
+    q.select(col(id), explode(centroidRanks(cents, graphNprobe)).as("cid"))
   }
 
-  /** Distinct undirected candidate pairs (va < vb) from trained-cell
-    * co-membership — the ONE pair generator behind the embedding-pair
-    * family (dedup_embedding / text_bitext_mine /
-    * vec_cluster_components via embeddingPairs, vec_knn_graph /
-    * vec_knn_hubness via its symmetric closure). Round 13 adds two
-    * scale guards, both measured on the clustered stress corpora
-    * (tools/gen_clustered.py):
-    *
-    *  1. EXACT-DUPLICATE COLLAPSE (output-preserving — no oracle
-    *     change): vectors with identical quantized `qv` have identical
-    *     probe cells, so the cell self-join runs over one
-    *     REPRESENTATIVE per qv group and member pairs are re-expanded
-    *     afterwards. The candidate SET is provably unchanged (equal qv
-    *     ⇒ equal cells), but an m-copy boilerplate spike costs m slots
-    *     → 1 slot in the join; the remaining m-proportional work is
-    *     expansion, which is output-shaped (every expanded pair IS a
-    *     candidate the semantics require scoring). Measured: the 10%
-    *     duplicate-spike corpus at 4x drops join slots 989k → 501k and
-    *     max cell 360 → 161.
-    *  2. CellCap (oracle-mirrored, see val doc): cells with more than
-    *     CellCap distinct qv drop before the rep self-join.
-    *
-    * Volume: O(cells · min(cell, cap)² + |output|) — linear in n under
-    * ~constant cell size, bounded per cell under the cap, and never
-    * worse than output-shaped for duplicates.
+  /** Pair-regime cell assignments `(vec_id, cid)` — each vector under
+    * its `graphNprobe` nearest scaled-k cells.
+    */
+  def pairAssignments(s: SparkSession, d: String): DataFrame =
+    flatKeys(s, d, pairInput(s, d), "vec_id")
+
+  /** Distinct undirected candidate pairs (va < vb) from flat trained-cell
+    * co-membership: [[cellPairs]] on the key `Seq("cid")`.
     */
   def candidatePairs(s: SparkSession, d: String,
                      cap: Long = CellCap): DataFrame =
@@ -331,55 +328,73 @@ object Ivf {
     */
   private[graft] def candidatePairsImpl(s: SparkSession, d: String,
                                         cap: Long,
-                                        collapse: Boolean): DataFrame = {
-    val cents = trainedCentroids(s, d, graphK(s, d))
-    val q = Tables.embeddings(s, d)
-      .repartition(col("vec_id"))
-      .select(col("vec_id"), quantCol.as("qv"))
-    if (!collapse) {
-      // NO duplicate qv anywhere (memoized probe) ⇒ every vector is its
-      // own rep: the qv-keyed collapse window (a full-corpus sort) and
-      // the two member re-expansion joins are identity ops — skip them.
-      // The cap agg stays: hot cells can exist without duplicates, and
-      // with all gids distinct "distinct reps per cell" IS the row
-      // count this agg sees. Strict < in the self-join: within-group
-      // pairs cannot exist without groups.
-      val reps = q.select(col("vec_id").as("gid"),
-        explode(centroidRanks(cents, graphNprobe)).as("cid"))
-      val keep = reps.groupBy(col("cid"))
-        .agg(count(lit(1)).as("m")).filter(col("m") <= cap)
-        .select(col("cid"))
-      val rk = reps.join(keep, Seq("cid"), "left_semi")
-      rk.as("a")
-        .join(rk.as("b"),
-          col("a.cid") === col("b.cid") && col("a.gid") < col("b.gid"))
-        .select(col("a.gid").as("va"), col("b.gid").as("vb"))
-        .distinct()
-    } else {
-      // gid = min vec_id per identical-qv group; one qv-keyed window
-      val grouped = q.withColumn("gid",
-        min(col("vec_id")).over(Window.partitionBy(col("qv"))))
-      val members = grouped.select(col("vec_id"), col("gid"))
-      val reps = grouped.filter(col("vec_id") === col("gid"))
-        .select(col("gid"), explode(centroidRanks(cents, graphNprobe)).as("cid"))
-      val keep = reps.groupBy(col("cid"))
-        .agg(count(lit(1)).as("m")).filter(col("m") <= cap)
-        .select(col("cid"))
-      val rk = reps.join(keep, Seq("cid"), "left_semi")
-      // rep-level co-membership: ga <= gb keeps within-group (ga = gb)
-      // pairs, whose expansion is the duplicate group's own clique
-      val repPairs = rk.as("a")
-        .join(rk.as("b"),
-          col("a.cid") === col("b.cid") && col("a.gid") <= col("b.gid"))
-        .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
-        .distinct()
-      repPairs
-        .join(members.select(col("gid").as("ga"), col("vec_id").as("va")), Seq("ga"))
-        .join(members.select(col("gid").as("gb"), col("vec_id").as("vb")), Seq("gb"))
-        .filter(col("va") =!= col("vb"))
-        .select(least(col("va"), col("vb")).as("va"),
-          greatest(col("va"), col("vb")).as("vb"))
-        .distinct()
+                                        collapse: Boolean): DataFrame =
+    cellPairs(s, d, cap, collapse, Seq("cid"), flatKeys(s, d, _, "gid"))
+
+  /** THE pair builder behind both quantizer legs. `assign` maps rep
+    * rows `(gid, qv)` to their cell keys `(gid, keys…)`; the result is
+    * every distinct undirected pair (va < vb) sharing a key. Two scale
+    * guards, both measured on the clustered stress corpora
+    * (tools/gen_clustered.py):
+    *
+    *  1. EXACT-DUPLICATE COLLAPSE (output-preserving — no oracle
+    *     change): vectors with identical quantized `qv` get identical
+    *     keys (equal residuals on the hier leg too), so the key
+    *     self-join runs over one REPRESENTATIVE per qv group and member
+    *     pairs are re-expanded afterwards. The candidate SET is
+    *     unchanged, but an m-copy boilerplate spike costs 1 join slot
+    *     instead of m; the remaining m-proportional work is expansion,
+    *     which is output-shaped. Measured: the 10% duplicate-spike
+    *     corpus at 4x drops join slots 989k → 501k and max cell
+    *     360 → 161. With `collapse = false` (no duplicate qv anywhere,
+    *     see `hasDupQv`) every vector is its own rep, so the qv-keyed
+    *     window and the two re-expansion joins are skipped.
+    *  2. Hot-key cap (oracle-mirrored, see CellCap / HierCellCap):
+    *     keys with more than `cap` distinct reps drop before the rep
+    *     self-join. It stays armed without duplicates — hot cells
+    *     exist without them.
+    *
+    * Volume: O(cells · min(cell, cap)² + |output|) — linear in n under
+    * ~constant cell size, bounded per cell under the cap, and never
+    * worse than output-shaped for duplicates.
+    */
+  private def cellPairs(s: SparkSession, d: String, cap: Long,
+                        collapse: Boolean, keys: Seq[String],
+                        assign: DataFrame => DataFrame): DataFrame = {
+    val q = pairInput(s, d)
+    // members: vec_id → gid, the min vec_id of its identical-qv group
+    val (reps, members) =
+      if (!collapse) (assign(q.select(col("vec_id").as("gid"), col("qv"))), None)
+      else {
+        val grouped = q.withColumn("gid",
+          min(col("vec_id")).over(Window.partitionBy(col("qv"))))
+        (assign(grouped.filter(col("vec_id") === col("gid"))
+            .select(col("gid"), col("qv"))),
+          Some(grouped.select(col("vec_id"), col("gid"))))
+      }
+    val keep = reps.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("m")).filter(col("m") <= cap)
+      .select(keys.map(col): _*)
+    val rk = reps.join(keep, keys, "left_semi")
+    val sameKey = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    members match {
+      case None =>
+        // strict <: within-group pairs cannot exist without groups
+        rk.as("a").join(rk.as("b"), sameKey && col("a.gid") < col("b.gid"))
+          .select(col("a.gid").as("va"), col("b.gid").as("vb"))
+          .distinct()
+      case Some(m) =>
+        // ga <= gb keeps within-group (ga = gb) pairs, whose expansion
+        // is the duplicate group's own clique
+        rk.as("a").join(rk.as("b"), sameKey && col("a.gid") <= col("b.gid"))
+          .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
+          .distinct()
+          .join(m.select(col("gid").as("ga"), col("vec_id").as("va")), Seq("ga"))
+          .join(m.select(col("gid").as("gb"), col("vec_id").as("vb")), Seq("gb"))
+          .filter(col("va") =!= col("vb"))
+          .select(least(col("va"), col("vb")).as("va"),
+            greatest(col("va"), col("vb")).as("vb"))
+          .distinct()
     }
   }
 
@@ -410,29 +425,28 @@ object Ivf {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   // ───────────────────────────────────────────────────────────────────
-  // HIERARCHICAL (two-level coarse→fine) pair regime — round 16.
+  // HIERARCHICAL leg (two-level coarse→fine). The same steps as the
+  // flat leg — train with lloydOnce, assign keys, pair with cellPairs
+  // — on the cell key (cid, fid): a fixed coarse model of kc cells ×
+  // kf fine cells trained on coarse RESIDUALS, data-proportional.
   //
-  // The r15 growth probe's own conclusion: past the flat-k ceiling
-  // (32768 cells binding at n ≈ 128k) the production answer is
-  // hierarchical assignment, not bigger flat k. Flat assignment costs
-  // O(k·dim) PER ROW, so growing k with the corpus makes the scan
-  // itself superlinear in n. Two levels split the key space into
-  // kc (fixed coarse model) × kf (fine cells over coarse RESIDUALS,
-  // data-proportional) effective cells at O((kc+kf)·dim) per-row cost:
-  // at n = 512k that is kc+kf = 256+496 = 752 centroid distances per
-  // row where flat proportional-k would need 32768 (43× — and flat is
-  // CLAMPED there, so its cells are 4× oversized and its pair join
+  // Flat assignment costs O(k·dim) PER ROW, so growing k with the
+  // corpus makes the scan itself superlinear in n. Two levels give
+  // kc·kf effective cells at O((kc+kf)·dim) per-row cost: at n = 512k
+  // that is kc+kf = 256+496 = 752 centroid distances per row where
+  // flat proportional-k would need 32768 (43× — and flat is CLAMPED
+  // there, so its cells are 4× oversized and its pair join
   // superlinear). The effective-cell ceiling moves from n ≈ 128k to
   // n ≈ 1M (kc·kfMax = 256·1024 cells of ~4).
   //
-  // Assignment never shuffles the corpus: coarse probes via the
-  // codegen'd centroidRanks literal model, residual via a broadcast
-  // join against the kc-row centroid table (a MODEL artifact, bounded
-  // by construction — NOT corpus-proportional), fine probes via a
-  // second centroidRanks over the exactly-quantized residual.
-  // Candidates come from the (cid, fid) equi-join. This is the
-  // IVFADC/residual coarse-fine composition (Jégou et al., TPAMI'11)
-  // applied to the pair regime.
+  // Assignment (`hierKeys`, one step for every hier caller) never
+  // shuffles the corpus: coarse probes via the codegen'd centroidRanks
+  // literal model, residual via a broadcast join against the kc-row
+  // centroid table (a MODEL artifact, bounded by construction — NOT
+  // corpus-proportional), fine probes via a second centroidRanks over
+  // the exactly-quantized residual. This is the IVFADC/residual
+  // coarse-fine composition (Jégou et al., TPAMI'11) applied to the
+  // pair regime.
   // ───────────────────────────────────────────────────────────────────
 
   /** Coarse cells for the hierarchical regime — fixed model constant
@@ -481,127 +495,89 @@ object Ivf {
     zip_with(col("qv"), col("cv"),
       (a, b) => floor(a.cast("double") - b + lit(0.5)).cast("long"))
 
-  /** Fine codebook: kf centroids trained on the coarse TOP-1 residuals
-    * with the same deterministic seed-then-one-Lloyd-update recipe as
-    * `trainedCentroids` (md5 bottom-kf seeds, exact BIGINT member sums,
-    * exact s/n centroids). Memoized per dir — a reusable model trained
-    * once, like the coarse quantizer.
+  /** Fine codebook: kf centroids trained by [[lloydOnce]] on the coarse
+    * TOP-1 residuals. Memoized per dir — a reusable model trained once,
+    * like the coarse quantizer.
     */
-  def hierFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
-    // benign-race memo — multi-job training must not run under a CHM
-    // bin lock (see graphK); putIfAbsent keeps the first-stored model
-    // so later callers always get the SAME object (spec-pinned)
-    val cached = fineCache.get(d)
-    if (cached != null) cached
-    else Option(fineCache.putIfAbsent(d, trainFineCentroids(s, d)))
-      .getOrElse(fineCache.get(d))
-  }
-
-  private def trainFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
-      val kf = hierKf(s, d)
+  def hierFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
+    model(s"$d#fine") {
       val cents = trainedCentroids(s, d, hierKc)
-      val r = quantizedVecs(s, d)
+      lloydOnce(quantizedVecs(s, d)
         .withColumn("cid", centroidRanks(cents, 1).getItem(0))
         .join(broadcast(centsDf(s, cents)), Seq("cid"))
-        .select(col("vec_id"), residCol.as("rq"))
-      val f0 = r.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(kf).collect()
-        .map(row => row.getLong(0) -> row.getSeq[Long](1).map(_.toDouble).toSeq)
-        .toSeq.sortBy(_._1)
-      r.withColumn("fid",
-          graft.plans.PqExpressions.centroidRanks(col("rq"), f0, 1).getItem(0))
-        .select(col("fid"), posexplode(col("rq")).as(Seq("pos", "v")))
-        .groupBy(col("fid"), (col("pos") + 1).cast("long").as("dim"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(row => (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (fid, rows) =>
-          fid -> rows.sortBy(_._2).map(t => t._3.toDouble / t._4).toSeq
-        }
-  }
+        .select(col("vec_id"), residCol.as("qv")), hierKf(s, d))
+    }
 
-  private val fineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
-
-  /** Hierarchical cell assignments `(vec_id, cid, fid)`: each vector
-    * under its `hierNprobe` nearest coarse cells × `hierFineNprobe`
-    * nearest fine cells of the per-cell residual — 8 keys per vector,
-    * zero corpus shuffle before the pair join (the repartition is the
-    * round-11 narrow-scan parallelism exchange, same as the flat
-    * regime's `pairAssignments`).
+  /** The coarse → residual → fine step, written once for every hier
+    * caller: each row of an `(id, qv)` frame under its `nprobeC`
+    * nearest coarse cells × `nprobeF` nearest fine cells of the
+    * per-cell residual — `(id, cid, fid)`, or with `ranked` both
+    * 1-based probe ranks `(id, cid, crn, fid, frn)` (posexplode
+    * position + 1, matching the oracle's ROW_NUMBER).
     */
-  def hierAssignments(s: SparkSession, d: String,
-                      nprobeC: Int = hierNprobe,
-                      nprobeF: Int = hierFineNprobe): DataFrame = {
+  private def hierKeys(s: SparkSession, d: String, q: DataFrame, id: String,
+                       nprobeC: Int, nprobeF: Int,
+                       ranked: Boolean = false): DataFrame = {
     val cents = trainedCentroids(s, d, hierKc)
     val fine = hierFineCentroids(s, d)
+    // one row per probed key; ranked, `rank` holds the 0-based position
+    def probe(ranks: Column, key: String, rank: String): Column =
+      if (ranked) posexplode(ranks).as(Seq(rank, key)) else explode(ranks).as(key)
+    val crn = if (ranked) Seq(col("crn")) else Nil
     // probe widths clamp to the surviving model sizes: on a degenerate
     // corpus (singleton coarse cells => all-zero residuals) the fine
     // codebook can collapse below hierFineNprobe, where the oracle's
     // `rn <= nprobe` silently yields fewer rows — the clamp is the
-    // exact Spark mirror of that semantics (r16 spike-fixture find)
-    Tables.embeddings(s, d)
-      .repartition(col("vec_id"))
-      .withColumn("qv", quantCol)
-      .select(col("vec_id"), col("qv"),
-        explode(centroidRanks(cents, math.min(nprobeC, cents.size))).as("cid"))
+    // exact Spark mirror of that semantics
+    val keyed = q
+      .select(col(id), col("qv"),
+        probe(centroidRanks(cents, math.min(nprobeC, cents.size)), "cid", "crn"))
       .join(broadcast(centsDf(s, cents)), Seq("cid"))
-      .select(col("vec_id"), col("cid"), residCol.as("rq"))
-      .select(col("vec_id"), col("cid"),
-        explode(graft.plans.PqExpressions.centroidRanks(
-          col("rq"), fine, math.min(nprobeF, fine.size))).as("fid"))
+      .select(Seq(col(id), col("cid")) ++ crn :+ residCol.as("rq"): _*)
+      .select(Seq(col(id), col("cid")) ++ crn :+ probe(
+        graft.plans.PqExpressions.centroidRanks(
+          col("rq"), fine, math.min(nprobeF, fine.size)), "fid", "frn"): _*)
+    if (!ranked) keyed
+    else keyed.select(col(id), col("cid"), (col("crn") + 1).cast("long").as("crn"),
+      col("fid"), (col("frn") + 1).cast("long").as("frn"))
   }
+
+  /** Hierarchical cell assignments `(vec_id, cid, fid)` at probe widths
+    * nprobeC × nprobeF (4×2 = 8 keys per vector by default), zero
+    * corpus shuffle before the pair join (the repartition is the pair
+    * regime's parallelism exchange, see `pairInput`).
+    */
+  def hierAssignments(s: SparkSession, d: String,
+                      nprobeC: Int = hierNprobe,
+                      nprobeF: Int = hierFineNprobe): DataFrame =
+    hierKeys(s, d, pairInput(s, d), "vec_id", nprobeC, nprobeF)
 
   /** [[hierAssignments]] with BOTH probe ranks exposed —
     * `(vec_id, cid, crn, fid, frn)` at the widest widths the caller
     * sweeps. One assignment pass serves every (nprobeC, nprobeF)
     * combination as a FILTER (`crn <= a AND frn <= b`): the
     * calibration query reads the same trained model once instead of
-    * re-assigning per combination. `posexplode` emits the 0-based
-    * probe position; ranks are 1-based to match the oracle's
-    * ROW_NUMBER.
+    * re-assigning per combination.
     */
   def hierAssignmentsRanked(s: SparkSession, d: String,
-                            maxC: Int, maxF: Int): DataFrame = {
-    val cents = trainedCentroids(s, d, hierKc)
-    val fine = hierFineCentroids(s, d)
-    Tables.embeddings(s, d)
-      .repartition(col("vec_id"))
-      .withColumn("qv", quantCol)
-      .select(col("vec_id"), col("qv"),
-        posexplode(centroidRanks(cents, math.min(maxC, cents.size)))
-          .as(Seq("cpos", "cid")))
-      .join(broadcast(centsDf(s, cents)), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        (col("cpos") + 1).cast("long").as("crn"), residCol.as("rq"))
-      .select(col("vec_id"), col("cid"), col("crn"),
-        posexplode(graft.plans.PqExpressions.centroidRanks(
-          col("rq"), fine, math.min(maxF, fine.size))).as(Seq("fpos", "fid")))
-      .select(col("vec_id"), col("cid"), col("crn"), col("fid"),
-        (col("fpos") + 1).cast("long").as("frn"))
-  }
+                            maxC: Int, maxF: Int): DataFrame =
+    hierKeys(s, d, pairInput(s, d), "vec_id", maxC, maxF, ranked = true)
 
-  /** Hot-cell cap for the hierarchical pair regime — the (cid, fid)
-    * member of the frequency-guard family beside CellCap /
-    * SimhashBandCap / EnsembleBandCap (r16 review fix: the first cut
-    * of the hier pair join had NEITHER the cap nor the duplicate
-    * collapse its flat ancestor ships, so an m-copy boilerplate spike
-    * was O(m²) in ONE cell). Buckets with more than this many
-    * DISTINCT quantized reps drop from candidate generation; a true
-    * pair survives unless all 8 of its shared probe keys are hot.
-    * No-op at every gate corpus; mirrored in every consuming oracle
-    * and exercised at a binding cap by vec_hier_cellcap_pairs.
+  /** Hot-key cap for the hierarchical leg — the (cid, fid) member of
+    * the frequency-guard family beside CellCap / SimhashBandCap /
+    * EnsembleBandCap: without it an m-copy boilerplate spike is O(m²)
+    * in ONE key. Keys with more than this many DISTINCT quantized reps
+    * drop from candidate generation; a true pair survives unless all 8
+    * of its shared probe keys are hot. No-op at every gate corpus;
+    * mirrored in every consuming oracle and exercised at a binding cap
+    * by vec_hier_cellcap_pairs.
     */
   val HierCellCap = 256L
 
-  /** Distinct undirected hierarchical candidate pairs (va < vb) —
-    * the (cid, fid) equi-join with the SAME two scale guards as the
-    * flat `candidatePairs`: exact-duplicate collapse (equal qv ⇒
-    * equal residuals ⇒ equal keys, so the join runs over one rep per
-    * qv group and member pairs re-expand afterwards —
-    * output-preserving, spec-pinned) and the HierCellCap hot-bucket
-    * drop (oracle-mirrored).
+  /** Distinct undirected hierarchical candidate pairs (va < vb):
+    * [[cellPairs]] on the key `Seq("cid", "fid")`, with the same two
+    * scale guards as the flat leg (duplicate collapse — equal qv ⇒
+    * equal residuals ⇒ equal keys — and the HierCellCap hot-key drop).
     */
   def hierCandidatePairs(s: SparkSession, d: String,
                          cap: Long = HierCellCap): DataFrame =
@@ -612,61 +588,9 @@ object Ivf {
     */
   private[graft] def hierCandidatePairsImpl(s: SparkSession, d: String,
                                             cap: Long,
-                                            collapse: Boolean): DataFrame = {
-    val cents = trainedCentroids(s, d, hierKc)
-    val fine = hierFineCentroids(s, d)
-    val q = Tables.embeddings(s, d)
-      .repartition(col("vec_id"))
-      .select(col("vec_id"), quantCol.as("qv"))
-    def assignKeys(df: DataFrame): DataFrame = df
-      .join(broadcast(centsDf(s, cents)), Seq("cid"))
-      .select(col("gid"), col("cid"), residCol.as("rq"))
-      // fine width clamps to the surviving codebook (see hierAssignments)
-      .select(col("gid"), col("cid"),
-        explode(graft.plans.PqExpressions.centroidRanks(
-          col("rq"), fine, math.min(hierFineNprobe, fine.size))).as("fid"))
-    if (!collapse) {
-      // no duplicate qv (memoized probe) ⇒ skip the collapse window and
-      // re-expansion — see candidatePairsImpl; the (cid, fid) cap agg
-      // stays armed
-      val reps = assignKeys(q.select(col("vec_id").as("gid"), col("qv"),
-        explode(centroidRanks(cents, math.min(hierNprobe, cents.size))).as("cid")))
-      val keep = reps.groupBy(col("cid"), col("fid"))
-        .agg(count(lit(1)).as("m")).filter(col("m") <= cap)
-        .select(col("cid"), col("fid"))
-      val rk = reps.join(keep, Seq("cid", "fid"), "left_semi")
-      rk.as("a")
-        .join(rk.as("b"),
-          col("a.cid") === col("b.cid") && col("a.fid") === col("b.fid") &&
-            col("a.gid") < col("b.gid"))
-        .select(col("a.gid").as("va"), col("b.gid").as("vb"))
-        .distinct()
-    } else {
-      val grouped = q.withColumn("gid",
-        min(col("vec_id")).over(Window.partitionBy(col("qv"))))
-      val members = grouped.select(col("vec_id"), col("gid"))
-      val reps = assignKeys(grouped.filter(col("vec_id") === col("gid"))
-        .select(col("gid"), col("qv"),
-          explode(centroidRanks(cents, math.min(hierNprobe, cents.size))).as("cid")))
-      val keep = reps.groupBy(col("cid"), col("fid"))
-        .agg(count(lit(1)).as("m")).filter(col("m") <= cap)
-        .select(col("cid"), col("fid"))
-      val rk = reps.join(keep, Seq("cid", "fid"), "left_semi")
-      val repPairs = rk.as("a")
-        .join(rk.as("b"),
-          col("a.cid") === col("b.cid") && col("a.fid") === col("b.fid") &&
-            col("a.gid") <= col("b.gid"))
-        .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
-        .distinct()
-      repPairs
-        .join(members.select(col("gid").as("ga"), col("vec_id").as("va")), Seq("ga"))
-        .join(members.select(col("gid").as("gb"), col("vec_id").as("vb")), Seq("gb"))
-        .filter(col("va") =!= col("vb"))
-        .select(least(col("va"), col("vb")).as("va"),
-          greatest(col("va"), col("vb")).as("vb"))
-        .distinct()
-    }
-  }
+                                            collapse: Boolean): DataFrame =
+    cellPairs(s, d, cap, collapse, Seq("cid", "fid"),
+      hierKeys(s, d, _, "gid", hierNprobe, hierFineNprobe))
 
   /** [[hierAssignCteSql]] extended with the capped-key chain: `qg`
     * (qv-duplicate groups), `hotcf` (buckets with > cap distinct
@@ -683,29 +607,13 @@ object Ivf {
       |          GROUP BY h.cid, h.fid HAVING COUNT(DISTINCT g.gid) > $cap),
       |${p}hk AS MATERIALIZED (SELECT h.* FROM ${p}hasg h ANTI JOIN ${p}hotcf USING (cid, fid))""".stripMargin
 
-  /** Oracle CTE chain ending in `hasg(vec_id, cid, fid)` — the full
-    * hierarchical replay: coarse train/assign (shared kmeans chain at
-    * k = hierKc), top-1 residuals, fine seed + one Lloyd update, then
-    * per-probe-cell residual fine assignment. `p` prefixes every CTE
-    * name (adaptive oracles compose this chain beside the flat one);
-    * `nprobeC`/`nprobeF` are the probe widths — the pair regime's
-    * 4×2 default, the semdedup cell regime's 1×1, the recall-curve
-    * calibration's wider sweeps. The fine CODEBOOK is width-
-    * independent (trained on top-1 residuals), so every width
-    * combination reads the same trained model, exactly like
-    * `hierAssignments`.
+  /** The fine-codebook training CTEs both hier oracle chains share —
+    * the SQL twin of [[hierFineCentroids]]: top-1 residuals `rt` (read
+    * from `${p}ca1`), md5 bottom-kf seeds and one exact Lloyd update,
+    * ending in `${p}fc1(fid, fv)`.
     */
-  def hierAssignCteSql(p: String = "", nprobeC: Int = hierNprobe,
-                       nprobeF: Int = hierFineNprobe,
-                       src: String = "embeddings"): String =
-    s"""${kmeansCteSql(hierKc.toString, p, src)},
-      |${p}casg AS MATERIALIZED (SELECT vec_id, qv, cid FROM (
-      |          SELECT vec_id, qv, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) rn
-      |          FROM ${p}d1) WHERE rn <= $nprobeC),
-      |${p}ca1 AS (SELECT vec_id, qv, cid FROM (
-      |          SELECT vec_id, qv, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) rn
-      |          FROM ${p}d1) WHERE rn = 1),
-      |${p}rt AS MATERIALIZED (SELECT a.vec_id, list_transform(generate_series(1,64),
+  private def fineCodebookCteSql(p: String): String =
+    s"""${p}rt AS MATERIALIZED (SELECT a.vec_id, list_transform(generate_series(1,64),
       |          i -> CAST(floor(CAST(a.qv[i] AS DOUBLE) - c.cv[i] + 0.5) AS BIGINT)) AS rq
       |       FROM ${p}ca1 a JOIN ${p}c1 c ON a.cid = c.cid),
       |${p}fkk AS (SELECT CAST(($hierKfSql) AS BIGINT) AS k),
@@ -722,7 +630,30 @@ object Ivf {
       |          FROM ${p}fd0) WHERE rn = 1),
       |${p}fu1 AS (SELECT fid, i AS dim, SUM(rq[i]) AS s, COUNT(*) AS n
       |        FROM ${p}fa0 CROSS JOIN ${p}ii GROUP BY fid, i),
-      |${p}fc1 AS MATERIALIZED (SELECT fid, list(CAST(s AS DOUBLE)/n ORDER BY dim) AS fv FROM ${p}fu1 GROUP BY fid),
+      |${p}fc1 AS MATERIALIZED (SELECT fid, list(CAST(s AS DOUBLE)/n ORDER BY dim) AS fv FROM ${p}fu1 GROUP BY fid)""".stripMargin
+
+  /** Oracle CTE chain ending in `hasg(vec_id, cid, fid)` — the full
+    * hierarchical replay: coarse train/assign (shared kmeans chain at
+    * k = hierKc), the shared fine codebook, then per-probe-cell
+    * residual fine assignment. `p` prefixes every CTE name (adaptive
+    * oracles compose this chain beside the flat one); `nprobeC`/
+    * `nprobeF` are the probe widths — the pair regime's 4×2 default,
+    * the semdedup cell regime's 1×1, the probe-query legs' 4×4. The
+    * fine CODEBOOK is width-independent (trained on top-1 residuals),
+    * so every width combination reads the same trained model, exactly
+    * like `hierAssignments`.
+    */
+  def hierAssignCteSql(p: String = "", nprobeC: Int = hierNprobe,
+                       nprobeF: Int = hierFineNprobe,
+                       src: String = "embeddings"): String =
+    s"""${kmeansCteSql(hierKc.toString, p, src)},
+      |${p}casg AS MATERIALIZED (SELECT vec_id, qv, cid FROM (
+      |          SELECT vec_id, qv, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) rn
+      |          FROM ${p}d1) WHERE rn <= $nprobeC),
+      |${p}ca1 AS (SELECT vec_id, qv, cid FROM (
+      |          SELECT vec_id, qv, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) rn
+      |          FROM ${p}d1) WHERE rn = 1),
+      |${fineCodebookCteSql(p)},
       |${p}rp AS (SELECT p.vec_id, p.cid, list_transform(generate_series(1,64),
       |          i -> CAST(floor(CAST(p.qv[i] AS DOUBLE) - c.cv[i] + 0.5) AS BIGINT)) AS rq
       |       FROM ${p}casg p JOIN ${p}c1 c ON p.cid = c.cid),
@@ -738,8 +669,7 @@ object Ivf {
     * `hasgr(vec_id, cid, crn, fid, frn)` at widths (maxC, maxF), the
     * oracle twin of [[hierAssignmentsRanked]]: one assignment replay
     * serves every (nprobeC <= maxC, nprobeF <= maxF) combination as a
-    * rank filter. Shares every training CTE with the unranked chain
-    * (same seeds, same one-Lloyd-update fine codebook).
+    * rank filter. Same seeds, same fine codebook as the unranked chain.
     */
   def hierRankedCteSql(p: String = "", maxC: Int = hierNprobe,
                        maxF: Int = hierFineNprobe): String =
@@ -748,24 +678,7 @@ object Ivf {
       |          SELECT vec_id, qv, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) rn
       |          FROM ${p}d1) WHERE rn <= $maxC),
       |${p}ca1 AS (SELECT vec_id, qv, cid FROM ${p}casg WHERE crn = 1),
-      |${p}rt AS MATERIALIZED (SELECT a.vec_id, list_transform(generate_series(1,64),
-      |          i -> CAST(floor(CAST(a.qv[i] AS DOUBLE) - c.cv[i] + 0.5) AS BIGINT)) AS rq
-      |       FROM ${p}ca1 a JOIN ${p}c1 c ON a.cid = c.cid),
-      |${p}fkk AS (SELECT CAST(($hierKfSql) AS BIGINT) AS k),
-      |${p}f0 AS (SELECT fid, fv FROM (
-      |         SELECT vec_id AS fid, list_transform(rq, x -> CAST(x AS DOUBLE)) AS fv,
-      |           ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS srn
-      |         FROM ${p}rt), ${p}fkk WHERE srn <= ${p}fkk.k),
-      |${p}fd0 AS (SELECT rt.vec_id, rt.rq, f.fid,
-      |          list_sum(list_transform(generate_series(1,64),
-      |            i -> (CAST(rt.rq[i] AS DOUBLE) - f.fv[i]) * (CAST(rt.rq[i] AS DOUBLE) - f.fv[i]))) AS dist
-      |        FROM ${p}rt rt CROSS JOIN ${p}f0 f),
-      |${p}fa0 AS (SELECT vec_id, rq, fid FROM (
-      |          SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, fid) rn
-      |          FROM ${p}fd0) WHERE rn = 1),
-      |${p}fu1 AS (SELECT fid, i AS dim, SUM(rq[i]) AS s, COUNT(*) AS n
-      |        FROM ${p}fa0 CROSS JOIN ${p}ii GROUP BY fid, i),
-      |${p}fc1 AS MATERIALIZED (SELECT fid, list(CAST(s AS DOUBLE)/n ORDER BY dim) AS fv FROM ${p}fu1 GROUP BY fid),
+      |${fineCodebookCteSql(p)},
       |${p}rp AS (SELECT p.vec_id, p.cid, p.crn, list_transform(generate_series(1,64),
       |          i -> CAST(floor(CAST(p.qv[i] AS DOUBLE) - c.cv[i] + 0.5) AS BIGINT)) AS rq
       |       FROM ${p}casg p JOIN ${p}c1 c ON p.cid = c.cid),
@@ -778,12 +691,14 @@ object Ivf {
       |          FROM ${p}fd1) WHERE rn <= $maxF)""".stripMargin
 
   // ───────────────────────────────────────────────────────────────────
-  // ADAPTIVE QUANTIZER (round 17, VERDICT r16 Next #1): route the
-  // pair-generating consumers (vec_knn_graph / vec_knn_hubness,
-  // dedup_embedding / text_bitext_mine / vec_cluster_components via
-  // embeddingPairs) through FLAT or HIERARCHICAL assignment from one
-  // memoized corpus statistic — the DedupQueries.decideEdgeShape
-  // pattern applied to the quantizer choice.
+  // ADAPTIVE QUANTIZER: route the pair-generating consumers
+  // (vec_knn_graph / vec_knn_hubness, dedup_embedding /
+  // text_bitext_mine / vec_cluster_components via embeddingPairs)
+  // through the FLAT or the HIERARCHICAL leg from one memoized corpus
+  // statistic — the DedupQueries.decideEdgeShape pattern applied to
+  // the quantizer choice. Both legs are the same builder (cellPairs)
+  // over a different key, so the switch picks a key shape and a model,
+  // never a different algorithm.
   //
   // Why a switch instead of hier-always: flat proportional-k has
   // measurably better recall at small n (0.80 vs 0.77 @3 at the gate)
@@ -793,9 +708,8 @@ object Ivf {
   // and the clamped-k fallback re-creates the oversized-cell quadratic
   // the proportional design exists to prevent.
   //
-  // The switch point is MEASURED, not guessed — the r17 consumer-level
-  // ladder (growth_consumer_r17/, vec_knn_graph warm min-of-runs,
-  // forced legs):
+  // The switch point is MEASURED (growth_consumer_r17.json:
+  // vec_knn_graph warm min-of-runs, forced legs):
   //     n        flat      hier
   //     500      1.12 s    1.36 s   (flat wins; training overhead)
   //     2,000    1.37      1.36     (tie)

@@ -400,13 +400,15 @@ object SimilarityQueries {
     topK(scored, 5)
   }
 
-  /** Hier leg of ann_reranked (and its twin) — the full IVF-PQ serving
-    * composition: hier key-intersection candidates, ADC table-lookup
-    * scores over the candidates only (the flat leg ADC-scans the WHOLE
-    * corpus per probe — the linear-in-n pass this leg exists to
-    * bound), 32-candidate shortlist, exact cosine rerank.
+  /** The ann_reranked body both legs share — the IVF-PQ serving
+    * composition: ADC table-lookup scores over the `(qid, vec_id)`
+    * candidates `cands`, a 32-candidate shortlist, exact cosine rerank.
+    * `None` scores every corpus vector per probe (the flat leg's
+    * full-corpus ADC scan); the hier leg passes its key-intersection
+    * candidates, bounding exactly that linear-in-n pass.
     */
-  private def hierRerankedBody(s: SparkSession, d: String): DataFrame = {
+  private def rerankedBody(s: SparkSession, d: String,
+                           cands: Option[DataFrame]): DataFrame = {
     val cents = pqCents(s, d)
     val coded = Tables.embeddings(s, d)
       .withColumn("enc", graft.plans.PqExpressions.pqEncode(col("embedding"), cents))
@@ -422,9 +424,12 @@ object SimilarityQueries {
       }
     }.reduce(_ + _)
     val wS = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vec_id"))
-    val shortlist = hierQueryCands(s, d, Ivf.hierNprobe, Ivf.hierFineNprobe)
-      .join(coded, Seq("vec_id"))
-      .join(broadcast(probeDf), Seq("qid"))
+    val pairs = cands match {
+      case Some(c) => c.join(coded, Seq("vec_id")).join(broadcast(probeDf), Seq("qid"))
+      case None => coded.crossJoin(broadcast(probeDf))
+        .filter(col("vec_id") =!= col("qid"))
+    }
+    val shortlist = pairs
       .withColumn("adc", adc)
       .withColumn("srn", row_number().over(wS))
       .filter(col("srn") <= 32)
@@ -435,37 +440,11 @@ object SimilarityQueries {
     topK(scored, 5)
   }
 
-  /** The pre-r18 ann_reranked body — the flat leg of the adaptive
-    * entry: full-corpus ADC scan per probe, 32-candidate shortlist,
-    * exact rerank.
+  /** Hier leg of ann_reranked (and its twin): hier key-intersection
+    * candidates into [[rerankedBody]].
     */
-  private def annRerankedFlatBody(s: SparkSession, d: String): DataFrame = {
-    val cents = pqCents(s, d)
-    val coded = Tables.embeddings(s, d)
-      .withColumn("enc", graft.plans.PqExpressions.pqEncode(col("embedding"), cents))
-      .select(col("vec_id") +: (0 until 8).map(m =>
-        shiftright(col("enc.code"), 4 * m).bitwiseAND(15).as(s"c$m")): _*)
-    val probeDf = Tables.embeddings(s, d).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid") +:
-        (for (m <- 0 until 8; j <- 0 until pqK)
-          yield pqSubDist(m, cents(m)(j)).as(s"d_${m}_$j")): _*)
-    val adc = (0 until 8).map { m =>
-      (0 until pqK).foldLeft(lit(null).cast("double")) { (acc, j) =>
-        when(col(s"c$m") === j, col(s"d_${m}_$j")).otherwise(acc)
-      }
-    }.reduce(_ + _)
-    val wS = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vec_id"))
-    val shortlist = coded.crossJoin(broadcast(probeDf))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("adc", adc)
-      .withColumn("srn", row_number().over(wS))
-      .filter(col("srn") <= 32)
-      .select(col("qid"), col("vec_id"))
-    val scored = shortlist.join(corpus(s, d), Seq("vec_id"))
-      .join(broadcast(queriesDf(s, d)), Seq("qid"))
-      .select(col("qid"), col("vec_id"), pairCos(col("qv"), col("qnrm")).as("cos"))
-    topK(scored, 5)
-  }
+  private def hierRerankedBody(s: SparkSession, d: String): DataFrame =
+    rerankedBody(s, d, Some(hierQueryCands(s, d, Ivf.hierNprobe, Ivf.hierFineNprobe)))
 
   /** Oracle CTEs for the hier candidate set, ending in `${p}cand(qid,
     * vec_id)` — the SQL twin of [[hierQueryCands]]. `p` prefixes every
@@ -527,6 +506,51 @@ object SimilarityQueries {
        |${p}rr AS (SELECT qid, vec_id, cos,
        |        ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
        |      FROM ${p}rc)""".stripMargin
+
+  /** SemDeDup's drop rule over a keyed `(vec_id, cid, fid)` frame: a
+    * vector drops when its (cid, fid) cell holds a lower-vec_id vector
+    * with 4dp-rounded cosine >= 0.40. One verdict per vector (kept
+    * cells included), so the downstream writer is one anti-join away
+    * from the deduped corpus.
+    */
+  private def semdedupVerdicts(s: SparkSession, d: String,
+                               keyed: DataFrame): DataFrame = {
+    val asg = keyed.join(corpus(s, d), Seq("vec_id"))
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        col("cid"), col("fid"))
+    val a = asg.select(col("cid"), col("fid"), col("vec_id").as("va"),
+      col("embedding").as("ea"), col("nrm").as("na"))
+    val b = asg.select(col("cid"), col("fid"), col("vec_id").as("vb"),
+      col("embedding").as("eb"), col("nrm").as("nb"))
+    val dropped = a.join(b, Seq("cid", "fid"))
+      .filter(col("va") < col("vb"))
+      .select(col("vb").as("vec_id"),
+        round(VectorFunctions.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
+          .as("cos"))
+      .filter(col("cos") >= 0.4)
+      .select(col("vec_id")).distinct()
+    asg.join(dropped.withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cid"), col("fid"),
+        coalesce(col("dropped"), lit(0L)).as("dropped"))
+  }
+
+  /** Oracle twin of [[semdedupVerdicts]]: the tail CTEs and final
+    * SELECT over the keyed relation `from`, referenced as `a`.
+    */
+  private def semdedupVerdictSql(from: String, a: String): String =
+    s"""emb AS (SELECT $a.vec_id, $a.cid, $a.fid, e.embedding
+       |        FROM $from JOIN embeddings e USING (vec_id)),
+       |pd AS (SELECT DISTINCT y.vec_id
+       |       FROM emb x JOIN emb y ON x.cid = y.cid AND x.fid = y.fid AND x.vec_id < y.vec_id
+       |       WHERE ROUND(
+       |         list_sum(list_transform(generate_series(1, 64),
+       |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))) /
+       |         (sqrt(list_sum(list_transform(generate_series(1, 64),
+       |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE)))) *
+       |          sqrt(list_sum(list_transform(generate_series(1, 64),
+       |           i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))), 4) >= 0.4)
+       |SELECT $a.vec_id, $a.cid, $a.fid, CAST(pd.vec_id IS NOT NULL AS BIGINT) AS dropped
+       |FROM $from LEFT JOIN pd ON $a.vec_id = pd.vec_id""".stripMargin
 
   /** The count-gate CTE every adaptive probe oracle unions under. */
   private val nselCte: String =
@@ -870,37 +894,16 @@ object SimilarityQueries {
     // fine count tracks the corpus — cells stay ~constant-sized at
     // O((kc+kf)·dim) assignment. Both legs emit (cid, fid) (flat pads
     // fid = -1) and the oracle replays the same count-gated decision.
-    // Output is a verdict per vector (kept cells included), so the
-    // downstream writer is one anti-join away from the deduped corpus.
     "pipeline_semdedup" -> Query(
-      (s, d) => {
-        val keyed = Ivf.decideQuantizer(s, d) match {
-          case "hier" => Ivf.hierAssignments(s, d, 1, 1)
-          case _ =>
-            val cents = trainedCentroids(s, d)
-            corpus(s, d).withColumn("qv", quantCol)
-              .select(col("vec_id"),
-                centroidRanks(cents, 1).getItem(0).as("cid"),
-                lit(-1L).as("fid"))
-        }
-        val asg = keyed.join(corpus(s, d), Seq("vec_id"))
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            col("cid"), col("fid"))
-        val a = asg.select(col("cid"), col("fid"), col("vec_id").as("va"),
-          col("embedding").as("ea"), col("nrm").as("na"))
-        val b = asg.select(col("cid"), col("fid"), col("vec_id").as("vb"),
-          col("embedding").as("eb"), col("nrm").as("nb"))
-        val dropped = a.join(b, Seq("cid", "fid"))
-          .filter(col("va") < col("vb"))
-          .select(col("vb").as("vec_id"),
-            round(VectorFunctions.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
-              .as("cos"))
-          .filter(col("cos") >= 0.4)
-          .select(col("vec_id")).distinct()
-        asg.join(dropped.withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cid"), col("fid"),
-            coalesce(col("dropped"), lit(0L)).as("dropped"))
-      },
+      (s, d) => semdedupVerdicts(s, d, Ivf.decideQuantizer(s, d) match {
+        case "hier" => Ivf.hierAssignments(s, d, 1, 1)
+        case _ =>
+          val cents = trainedCentroids(s, d)
+          corpus(s, d).withColumn("qv", quantCol)
+            .select(col("vec_id"),
+              centroidRanks(cents, 1).getItem(0).as("cid"),
+              lit(-1L).as("fid"))
+      }),
       Some(s"""WITH $gatedBaseCtes,
              |$kmeansCteSqlGated,
              |${Ivf.hierAssignCteSql("h_", 1, 1, "embh")},
@@ -910,19 +913,7 @@ object SimilarityQueries {
              |       UNION ALL
              |       SELECT vec_id, cid, fid FROM h_hasg
              |       WHERE (SELECT hier FROM nsel)),
-             |emb AS (SELECT a1.vec_id, a1.cid, a1.fid, e.embedding
-             |        FROM a1 JOIN embeddings e USING (vec_id)),
-             |pd AS (SELECT DISTINCT y.vec_id
-             |       FROM emb x JOIN emb y ON x.cid = y.cid AND x.fid = y.fid AND x.vec_id < y.vec_id
-             |       WHERE ROUND(
-             |         list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))) /
-             |         (sqrt(list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE)))) *
-             |          sqrt(list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))), 4) >= 0.4)
-             |SELECT a1.vec_id, a1.cid, a1.fid, CAST(pd.vec_id IS NOT NULL AS BIGINT) AS dropped
-             |FROM a1 LEFT JOIN pd ON a1.vec_id = pd.vec_id""".stripMargin)
+             |${semdedupVerdictSql("a1", "a1")}""".stripMargin)
     ),
 
     // FORCED-HIER SEMDEDUP TWIN — pipeline_semdedup's hierarchical leg
@@ -933,40 +924,9 @@ object SimilarityQueries {
     // against the standalone hier replay every round. The same
     // falsifier pattern as vec_hier_cellcap_pairs.
     "pipeline_semdedup_hier" -> Query(
-      (s, d) => {
-        val asg = Ivf.hierAssignments(s, d, 1, 1)
-          .join(corpus(s, d), Seq("vec_id"))
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            col("cid"), col("fid"))
-        val a = asg.select(col("cid"), col("fid"), col("vec_id").as("va"),
-          col("embedding").as("ea"), col("nrm").as("na"))
-        val b = asg.select(col("cid"), col("fid"), col("vec_id").as("vb"),
-          col("embedding").as("eb"), col("nrm").as("nb"))
-        val dropped = a.join(b, Seq("cid", "fid"))
-          .filter(col("va") < col("vb"))
-          .select(col("vb").as("vec_id"),
-            round(VectorFunctions.dot(col("ea"), col("eb")) / (col("na") * col("nb")), 4)
-              .as("cos"))
-          .filter(col("cos") >= 0.4)
-          .select(col("vec_id")).distinct()
-        asg.join(dropped.withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cid"), col("fid"),
-            coalesce(col("dropped"), lit(0L)).as("dropped"))
-      },
+      (s, d) => semdedupVerdicts(s, d, Ivf.hierAssignments(s, d, 1, 1)),
       Some(s"""WITH ${Ivf.hierAssignCteSql("", 1, 1)},
-             |emb AS (SELECT h.vec_id, h.cid, h.fid, e.embedding
-             |        FROM hasg h JOIN embeddings e USING (vec_id)),
-             |pd AS (SELECT DISTINCT y.vec_id
-             |       FROM emb x JOIN emb y ON x.cid = y.cid AND x.fid = y.fid AND x.vec_id < y.vec_id
-             |       WHERE ROUND(
-             |         list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))) /
-             |         (sqrt(list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE)))) *
-             |          sqrt(list_sum(list_transform(generate_series(1, 64),
-             |           i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))), 4) >= 0.4)
-             |SELECT h.vec_id, h.cid, h.fid, CAST(pd.vec_id IS NOT NULL AS BIGINT) AS dropped
-             |FROM hasg h LEFT JOIN pd ON h.vec_id = pd.vec_id""".stripMargin)
+             |${semdedupVerdictSql("hasg h", "h")}""".stripMargin)
     ),
 
     // TWO-STAGE retrieval (shortlist + rerank) — how production vector
@@ -989,7 +949,7 @@ object SimilarityQueries {
     "ann_reranked" -> Query(
       (s, d) => Ivf.decideQuantizer(s, d) match {
         case "hier" => hierRerankedBody(s, d)
-        case _ => annRerankedFlatBody(s, d)
+        case _ => rerankedBody(s, d, None)
       },
       Some(s"""WITH $gatedBaseCtes,
              |$pqCentsCteSql,

@@ -112,6 +112,32 @@ class IvfAdaptiveSpec extends AnyFunSuite {
     assert(hOn.nonEmpty && hOff === hOn, "hier skip path diverged")
   }
 
+  test("collapse-skip plans carry no qv window and no re-expansion joins (flat + hier)") {
+    // the skip path's saving is structural: the qv-keyed window (a
+    // full-corpus sort) and the two rep → member joins on ga/gb must be
+    // absent from the collapse = false plan and present in the
+    // collapse = true plan, on both quantizer legs
+    val clean = fixture("ivfadapt_plan", 120, 0)
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val p = df.queryExecution.optimizedPlan
+      val windows = p.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+      }.size
+      val expansions = p.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.condition.exists(_.references.exists(a => a.name == "ga" || a.name == "gb")) => j
+      }.size
+      (windows, expansions)
+    }
+    for ((leg, impl) <- Seq("flat" -> Ivf.candidatePairsImpl _,
+                             "hier" -> Ivf.hierCandidatePairsImpl _)) {
+      assert(shape(impl(spark, clean, Ivf.CellCap, false)) === ((0, 0)),
+        s"$leg skip path must drop the window and both expansion joins")
+      val (w, e) = shape(impl(spark, clean, Ivf.CellCap, true))
+      assert(w >= 1 && e === 2, s"$leg collapse path must keep its window and two expansion joins")
+    }
+  }
+
   test("the probe keeps the collapse armed on a duplicate-bearing corpus") {
     // the production entry points route through hasDupQv —
     // on a spiked corpus the chosen path must still carry the

@@ -19,7 +19,10 @@
 set -u
 cd /root/repo
 AO="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-JOPTS="-Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx24g -XX:ReservedCodeCacheSize=512m"
+# heap: half of MemTotal clamped to 2-8 g, the same formula as the
+# tier-1 test command's SPARK_DRIVER_MEM
+XMX="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
+JOPTS="-Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx$XMX -XX:ReservedCodeCacheSize=512m"
 
 python3 - <<'PYEOF'
 import os
@@ -55,5 +58,5 @@ rc=$?
 echo "verify rc=$rc"
 if [ $rc -ne 0 ]; then echo "VERIFY FAILED"; exit $rc; fi
 python3 tools/local_verify.py target/sfgate5k target/verify_gate5k \
-  | tee gate5k_verify_r18.txt
+  | tee target/gate5k_verify.txt
 echo ALL_DONE
